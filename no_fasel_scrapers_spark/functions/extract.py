@@ -622,10 +622,19 @@ def extract_page(url: str, role: str, html: bytes | None):
     return row
 
 
+EXTRACT_COLS = [
+    "url", "role", "site", "links", "cards", "fields", "last_page", "text",
+]
+
+
 def extract_map_in_pandas(
     batches: Iterable[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     """``mapInPandas`` body: (url, role, html[, ...]) → EXTRACT_SCHEMA rows.
+
+    Every input column other than ``html`` and the extraction's own outputs
+    is carried through by name after them, so the caller's schema is
+    ``EXTRACT_SCHEMA`` plus those columns in input order.
 
     Usage::
 
@@ -636,10 +645,8 @@ def extract_map_in_pandas(
             extract_page(u, r, h)
             for u, r, h in zip(pdf["url"], pdf["role"], pdf["html"])
         ]
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "url", "role", "site", "links", "cards", "fields",
-                "last_page", "text",
-            ],
-        )
+        out = pd.DataFrame(rows, columns=EXTRACT_COLS)
+        for c in pdf.columns:
+            if c != "html" and c not in EXTRACT_COLS:
+                out[c] = pdf[c].to_numpy()
+        yield out

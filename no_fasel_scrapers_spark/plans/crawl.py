@@ -55,12 +55,14 @@ deterministic and testable.
 from __future__ import annotations
 
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.extract import EXTRACT_SCHEMA, extract_page
+from ..functions.extract import EXTRACT_SCHEMA, extract_map_in_pandas
 from ..operators.frontier import (
     ORDER_COLS,
     dedup_within,
@@ -77,40 +79,15 @@ from ..operators.seen_filter import (
     BROADCAST_MAX_BYTES,
     build_filter_blobs,
     dedup_against_seen,
+    invalidate_recrawl,
     merge_filter_blobs,
 )
 from ..sources.catalog import Catalog
 
-PASSTHROUGH = ["site", "category", "depth", "priority", "url_template"]
 CRAWL_EXTRACT_SCHEMA = (
     EXTRACT_SCHEMA
     + ", category string, depth int, priority int, url_template string, wave int"
 )
-
-
-def _extractor(wave_no: int):
-    """mapInPandas body with frontier-column passthrough."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                out = extract_page(rec["url"], rec["role"], rec["html"])
-                out["category"] = rec["category"]
-                out["depth"] = rec["depth"]
-                out["priority"] = rec["priority"]
-                out["url_template"] = rec["url_template"]
-                out["wave"] = wave_no
-                rows.append(out)
-            cols = [
-                "url", "role", "site", "links", "cards", "fields",
-                "last_page", "text", "category", "depth", "priority",
-                "url_template", "wave",
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return run
 
 
 @dataclass
@@ -132,10 +109,13 @@ def _obs_n(obs: Observation, fallback_df: DataFrame, col: str = "n") -> int:
     the Observation never fires and PySpark's ``get`` trips a JVM-side
     assertion.  The fallback count only runs for such degenerate waves,
     where the input is the wave-bounded (persisted) frontier slice —
-    never the pages or seen tables."""
+    never the pages or seen tables.  Any other error propagates."""
     try:
         return int(obs.get[col] or 0)
-    except Exception:
+    except Py4JJavaError as ex:
+        cls = ex.java_exception.getClass().getName()
+        if cls != "java.lang.AssertionError":
+            raise
         return fallback_df.count()
 
 
@@ -187,7 +167,6 @@ def run_crawl(
     lineage: list[dict] | None = None,
     cache_pages: bool = True,
     max_pagination: int = 100_000,
-    overlap_frontier: bool = True,
 ) -> CrawlResult:
     pages_k = _prep_pages(pages)
     # The pages side is scanned once per wave.  Caching pays when the
@@ -216,14 +195,12 @@ def run_crawl(
                 )
             )
     if recrawl is not None:
-        # recrawl invalidation (cuckoo-delete semantics on the exact set):
-        # dropped urls become fetchable again this run
-        from ..operators.seen_filter import invalidate_recrawl
-
+        # recrawl invalidation on the exact set: dropped urls become
+        # fetchable again this run
         keys = with_frontier_keys(recrawl.select("url"), n_salts).select(
             "url_hash"
         )
-        seen, _ = invalidate_recrawl(seen, keys, n_shards=n_shards)
+        seen = invalidate_recrawl(seen, keys)
         if catalog.exists("seen"):
             # the invalidated set replaces the append-log atomically: one
             # snapshot marked 'compact' restarts the log (Iceberg REPLACE)
@@ -344,8 +321,9 @@ def run_crawl(
         ).alias("last_page"),
         F.col("depth"), F.col("priority"), F.col("url").alias("from_url"),
     )
+    # extraction derives `site` from the url; the rest rides through
     _extract_in_cols = (
-        "url", "role", "html", "site", "category", "depth", "priority",
+        "url", "role", "html", "category", "depth", "priority",
         "url_template",
     )
     # upper-bound bookkeeping for the pipelined frontier (see the tail):
@@ -359,352 +337,342 @@ def run_crawl(
         F.size(F.col("links"))
     )
 
-    # ---- pipelined-frontier state (overlap_frontier=True) ---------------
-    # The wave-k frontier writer runs on a thread UNDER wave k+1's fetch
-    # stage; `_f_prev` tracks (thread, error holder, wall holder, pins to
-    # unpersist once it lands).  `frontier_ub` carries a row-count UPPER
-    # BOUND for the frontier the writer is still materializing — what the
-    # broadcast-safety decision (bounded_wave) uses in place of the
-    # manifest count the serial tail would have.
-    _f_prev: dict | None = None
+    # ---- pipelined-frontier state ----------------------------------------
+    # The wave-k frontier writer runs on the pool UNDER wave k+1's fetch
+    # stage; `f_future` is that writer, joined one wave later.
+    # `frontier_ub` carries a row-count UPPER BOUND for the frontier the
+    # writer is still materializing — what the broadcast-safety decision
+    # (bounded_wave) uses in place of the not-yet-published manifest count.
+    f_future: Future | None = None
     _prev_nxt: DataFrame | None = None
     frontier_ub: int | None = None
 
-    def _join_prev_frontier():
-        nonlocal _f_prev
-        if _f_prev is None:
-            return
-        _f_prev["thread"].join()
-        if _f_prev["err"]:
-            raise _f_prev["err"][0]
-        t_ms["frontier_write_bg"] = _f_prev["ms"][0] if _f_prev["ms"] else 0
-        for h in _f_prev["pins"]:
-            h.unpersist()
-        _f_prev = None
+    def _top_hosts(scheduled: DataFrame) -> list[dict]:
+        return [
+            r.asDict()
+            for r in politeness_metrics(scheduled)
+            .orderBy(F.desc("n_urls"), "host")
+            .limit(16)
+            .collect()
+        ]
 
-    while wave_no < max_waves:
-        t_ms: dict = {}
-        _t0 = time.monotonic()
-
-        def _mark(stage):
-            nonlocal _t0
-            now = time.monotonic()
-            t_ms[stage] = round((now - _t0) * 1000)
-            _t0 = now
-
-        # emptiness comes free from the frontier snapshot's manifest row
-        # count whenever this frontier was published by the previous wave;
-        # the isEmpty() job only runs for an initial/resumed frontier whose
-        # size the manifest doesn't know (wave fixed-cost pass, VERDICT r1
-        # next-steps #9 — dedup_within cannot turn nonempty into empty)
-        if frontier_rows == 0:
-            break
-        if frontier_ub == 0:
-            # pipelined tail: the upper bound is exact at zero (leftover,
-            # link and pagination masses all zero), so the frontier the
-            # background writer is publishing is provably empty
-            break
-        frontier = dedup_within(frontier)
-        if (
-            frontier_rows is None
-            and frontier_ub is None
-            and frontier.isEmpty()
-        ):
-            # initial/resumed frontier of unknown size only: under the
-            # pipelined tail an isEmpty here would force the in-flight
-            # frontier's broadcasts to build a second time (broadcast
-            # exchanges are not shared across jobs); a nonzero-ub-but-
-            # empty frontier instead drains through one degenerate empty
-            # wave that the tail detects (n_wave == 0) and stops after
-            break
-        _mark("frontier_check")
-
-        wave, leftover = take_wave(frontier, wave_budget)
-        # wave/allowed/fresh sizes are collected as Observations on the one
-        # write action below — zero extra count() jobs per wave; blocked and
-        # dropped counts follow arithmetically
-        obs_wave, obs_allowed, obs_sched = (
-            Observation(), Observation(), Observation(),
-        )
-        # persist wave: its subplan (frontier sort + top-K) is referenced
-        # from both dedup union branches and the fetch path — caching runs
-        # it once per wave instead of per duplicate subtree
-        wave = wave.observe(obs_wave, F.count(F.lit(1)).alias("n")).persist()
-        allowed, _blocked = apply_robots(wave, robots_b)
-        allowed = allowed.observe(obs_allowed, F.count(F.lit(1)).alias("n"))
-
-        # Below bloom_min_seen the exact backstop alone is cheaper than
-        # building + probing blobs (two extra Python stages per wave);
-        # semantics are identical either way.  First crossing builds the
-        # blobs once from the full seen set.
-        if blobs is None and seen_count >= bloom_min_seen:
-            blobs = build_filter_blobs(
-                seen, n_shards, n_expected_per_shard=n_per_shard
+    def _write_seen(seen_out, seen_delta, blobs, wave: int) -> None:
+        catalog.write(seen_out, "seen", meta={"wave": wave, "kind": "delta"})
+        if blobs is not None:
+            # OR the wave's delta into the standing blobs (pinned size) and
+            # checkpoint; read-back keeps the blob lineage flat across waves
+            delta_blobs = build_filter_blobs(
+                seen_delta.select("url_hash"),
+                n_shards,
+                n_expected_per_shard=n_per_shard,
             )
-            catalog.write(blobs, "blobs", meta={"wave": wave_no})
-            blobs = catalog.read(spark, "blobs")
-        # a broadcast hint is only safe when the wave is KNOWN bounded:
-        # either by an explicit budget, or because the previous wave's
-        # frontier-snapshot manifest counted this frontier small (exact
-        # footer counts, job-free — ≤5M rows is ≤~40MB of hash keys).
-        # Unbudgeted unknown-size waves leave the strategy to AQE (which
-        # still broadcasts small runtime sizes, and falls back instead of
-        # OOMing).
-        bounded_wave = (
-            (wave_budget is not None and wave_budget <= 50_000_000)
-            or (frontier_rows is not None and frontier_rows <= 5_000_000)
-            # pipelined tail: the manifest count is still in flight, but
-            # the observation-derived UPPER bound (leftover + raw link
-            # mentions + deduped pagination extents) is >= the true size,
-            # so a small bound is just as safe to broadcast on
-            or (frontier_ub is not None and frontier_ub <= 5_000_000)
-        )
-        if (
-            seen_count == 0 and wave_no == 0 and seen_prior is None
-            and not caller_seen
-        ):
-            # truly-fresh first wave: the seen set is empty, the anti-join
-            # is the identity — skip its broadcast build + probe stages
-            fresh = allowed
-        else:
-            fresh = dedup_against_seen(
-                allowed, seen, blobs, n_shards,
-                broadcast_hint=bounded_wave, blob_strategy=blob_strategy,
+            catalog.write(
+                merge_filter_blobs(blobs, delta_blobs), "blobs",
+                meta={"wave": wave},
             )
-        scheduled = schedule_fetches(fresh, robots_b, n_salts).observe(
-            obs_sched,
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct("host").alias("n_hosts"),
-        )
 
-        # scheduled feeds several downstream actions this wave (host
-        # metrics, seen delta, fetch join); persist so the robots/bloom/
-        # politeness chain runs once, not once per action
-        scheduled = scheduled.persist()
+    def _write_frontier(nxt: DataFrame, wave: int):
+        t = time.monotonic()
+        snap = catalog.write(nxt, "frontier", meta={"wave": wave})
+        return snap, round((time.monotonic() - t) * 1000)
 
-        # "fetch" = join the wave against the pages table WITHOUT ever
-        # shuffling the big side: a broadcast left-semi first reduces pages
-        # to the wave's url_hashes in one streaming pass (a LeftOuter with
-        # pages on the build side would fall back to shuffling the whole
-        # pages table once the fixture-sized broadcast no longer fits); the
-        # outer join then runs between two wave-sized inputs, which AQE
-        # broadcasts.  The broadcast is one 8-byte hash per wave row,
-        # bounded by wave_budget.
-        wave_keys = scheduled.select("url_hash")
-        if bounded_wave:
-            wave_keys = F.broadcast(wave_keys)
-        pages_wave = pages_k.join(wave_keys, "url_hash", "left_semi")
-        # NO repartition_for_fetch here: the join output is already
-        # uniformly hash-partitioned on url_hash, and a (host, host_salt)
-        # repartition after the join would shuffle the wave's FULL HTML a
-        # second time (measured: the single largest cost of a 10^6-page
-        # wave).  Host grouping only matters for LIVE fetching — the live
-        # path (plans/live_fetch.py) salt-repartitions its slim wave
-        # BEFORE fetching, when rows are still url-metadata only; here the
-        # politeness schedule (fetch_seq/scheduled_ms) is already computed
-        # on the slim side, and extraction is row-wise.
-        #
-        # SHUFFLE_HASH pin (measured pathology, round 2): AQE estimated
-        # the semi-joined pages side small from the semi's selectivity
-        # guess and converted this join to broadcast — materializing the
-        # wave's FULL HTML (1 GB+ at 10^6 pages, unbounded at 10^10) as a
-        # broadcast relation AFTER already shuffling it for the initial
-        # sort-merge plan.  The hint gives the one plan that is safe at
-        # every wave size: each side shuffles once on url_hash, per-
-        # partition hash build, no sort of the html side, no html
-        # broadcast ever.
-        #
-        # The hint sits on the SLIM side (round-4 fix): hinting pages_wave
-        # made the SHJ BuildRight — every task built its hash relation out
-        # of the wave's HTML (~250k rows × ~3 KB ≈ 750 MB per partition at
-        # a 12M-page wave; allocation failures killed the crawl).  Spark
-        # ≥3.3 builds the preserved side of a left-outer SHJ (SPARK-36612
-        # landed in 3.3.0; this repo floors on PySpark 4.x anyway), so
-        # hinting `scheduled` gives BuildLeft: the hash
-        # relation holds only slim url rows and the HTML side streams
-        # through the probe — bounded build memory at ANY wave size.
-        fetched = scheduled.hint("SHUFFLE_HASH").join(
-            pages_wave, "url_hash", "left"
-        ).filter(
-            F.col("p_url").isNull() | (F.col("p_url") == F.col("url"))
-        )
+    # Background jobs (host metrics, seen/lineage/frontier checkpoints) run
+    # on this pool; `.result()` at each join point re-raises a worker's
+    # error, and leaving the block waits for every in-flight writer.
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        while wave_no < max_waves:
+            t_ms: dict = {}
+            _t0 = time.monotonic()
 
-        extracted = fetched.select(*_extract_in_cols).mapInPandas(
-            _extractor(wave_no), schema=CRAWL_EXTRACT_SCHEMA
-        )
+            def _mark(stage):
+                nonlocal _t0
+                now = time.monotonic()
+                t_ms[stage] = round((now - _t0) * 1000)
+                _t0 = now
 
-        # ---- checkpoint this wave's outputs (append-log snapshot) --------
-        # the hit count rides the write action as an Observation — the
-        # separate wave_ex.filter(...).count() job it replaces was one of
-        # the larger per-wave fixed costs (VERDICT r1 next-steps #9)
-        obs_hit = Observation()
-        extracted = extracted.observe(
-            obs_hit,
-            F.sum(
-                F.when(F.col("text").isNotNull(), 1).otherwise(0)
-            ).alias("n"),
-            # raw discovery masses for the pipelined tail's frontier-size
-            # upper bound — they ride the same write action for free
-            F.sum(_links_size).alias("n_links"),
-            F.sum(
-                F.when(_extent_pred, 1).otherwise(0)
-            ).alias("n_extents"),
-        )
-        snap = catalog.write(
-            extracted, "extracted", meta={"wave": wave_no, "kind": "delta"}
-        )
-        wave_ex = spark.read.parquet(snap.path)
-        _mark("fetch_extract_write")
+            # emptiness comes free from the frontier snapshot's manifest row
+            # count whenever this frontier was published by the previous
+            # wave; the isEmpty() job only runs for an initial/resumed
+            # frontier whose size the manifest doesn't know (wave fixed-cost
+            # pass, VERDICT r1 next-steps #9 — dedup_within cannot turn
+            # nonempty into empty)
+            if frontier_rows == 0:
+                break
+            if frontier_ub == 0:
+                # the upper bound is exact at zero (leftover, link and
+                # pagination masses all zero), so the frontier the
+                # background writer is publishing is provably empty
+                break
+            frontier = dedup_within(frontier)
+            if (
+                frontier_rows is None
+                and frontier_ub is None
+                and frontier.isEmpty()
+            ):
+                # initial/resumed frontier of unknown size only: once the
+                # writer is in flight an isEmpty here would force its
+                # broadcasts to build a second time (broadcast exchanges
+                # are not shared across jobs); a nonzero-ub-but-empty
+                # frontier instead drains through one degenerate empty wave
+                # that the tail detects (n_wave == 0) and stops after
+                break
+            _mark("frontier_check")
 
-        # ---- wave metrics -------------------------------------------------
-        # counts observed during the write action above (obs.get blocks
-        # until that action finished, which it already has)
-        n_wave = _obs_n(obs_wave, wave)
-        n_allowed = _obs_n(obs_allowed, allowed)
-        n_blocked = n_wave - n_allowed
-        n_fresh = _obs_n(obs_sched, scheduled)
-        seen_count += n_fresh
-        # obs_hit rides the SAME write plan AQE can rewrite around the
-        # CollectMetrics nodes on a degenerate empty wave — fall back like
-        # the other three (the recount reads the tiny written snapshot)
-        n_hit = _obs_n(obs_hit, wave_ex.filter(F.col("text").isNotNull()))
-        # lineage keeps the top-K busiest hosts, not every host: at crawl
-        # scale a wave can touch millions of hosts and an unbounded collect
-        # would be a driver OOM; the full per-host distribution stays
-        # queryable from the scheduled/extracted tables.  The collect runs
-        # on a worker THREAD so its job overlaps the seen-checkpoint write
-        # below — the two read independent inputs (persisted scheduled vs
-        # the same), and overlapping independent jobs hides per-job
-        # scheduling latency on a cluster the same way it does here.
-        import threading
+            wave, leftover = take_wave(frontier, wave_budget)
+            # wave/allowed/fresh sizes are collected as Observations on the
+            # one write action below — zero extra count() jobs per wave;
+            # blocked and dropped counts follow arithmetically
+            obs_wave, obs_allowed, obs_sched = (
+                Observation(), Observation(), Observation(),
+            )
+            # persist wave: its subplan (frontier sort + top-K) is
+            # referenced from both dedup union branches and the fetch path
+            # — caching runs it once per wave instead of per duplicate
+            # subtree
+            wave = wave.observe(
+                obs_wave, F.count(F.lit(1)).alias("n")
+            ).persist()
+            allowed, _blocked = apply_robots(wave, robots_b)
+            allowed = allowed.observe(
+                obs_allowed, F.count(F.lit(1)).alias("n")
+            )
 
-        host_metrics: list = []
-        _host_err: list = []
-
-        def _collect_hosts():
-            try:
-                host_metrics.extend(
-                    r.asDict()
-                    for r in politeness_metrics(scheduled)
-                    .orderBy(F.desc("n_urls"), "host")
-                    .limit(16)
-                    .collect()
+            # Below bloom_min_seen the exact backstop alone is cheaper than
+            # building + probing blobs (two extra Python stages per wave);
+            # semantics are identical either way.  First crossing builds
+            # the blobs once from the full seen set.
+            if blobs is None and seen_count >= bloom_min_seen:
+                blobs = build_filter_blobs(
+                    seen, n_shards, n_expected_per_shard=n_per_shard
                 )
-            except BaseException as ex:  # re-raised on join
-                _host_err.append(ex)
-
-        host_thread = threading.Thread(target=_collect_hosts, daemon=True)
-        host_thread.start()
-        _mark("wave_counts")
-        links_df = wave_ex.select(*_links_cols).filter(
-            F.col("l").isNotNull()
-        )
-
-        # ---- audit rank / seen update ------------------------------------
-        if audit:
-            ranked = with_audit_rank(scheduled)
-            seen_delta = ranked.select(
-                "url_hash", "url", F.lit(wave_no).alias("wave"),
-                F.col("rank").cast("int").alias("rank"),
+                catalog.write(blobs, "blobs", meta={"wave": wave_no})
+                blobs = catalog.read(spark, "blobs")
+            # a broadcast hint is only safe when the wave is KNOWN bounded:
+            # either by an explicit budget, or because the previous wave's
+            # frontier-snapshot manifest counted this frontier small (exact
+            # footer counts, job-free — ≤5M rows is ≤~40MB of hash keys).
+            # Unbudgeted unknown-size waves leave the strategy to AQE
+            # (which still broadcasts small runtime sizes, and falls back
+            # instead of OOMing).
+            bounded_wave = (
+                (wave_budget is not None and wave_budget <= 50_000_000)
+                or (frontier_rows is not None and frontier_rows <= 5_000_000)
+                # the manifest count is still in flight, but the
+                # observation-derived UPPER bound (leftover + raw link
+                # mentions + deduped pagination extents) is >= the true
+                # size, so a small bound is just as safe to broadcast on
+                or (frontier_ub is not None and frontier_ub <= 5_000_000)
             )
-        else:
-            seen_delta = scheduled.select(
-                "url_hash", "url", F.lit(wave_no).alias("wave"),
-                F.lit(-1).alias("rank"),
-            )
-        # append-log: only this wave's delta is written (O(delta), never a
-        # rewrite of the growing set — the 10^10-URL requirement); read_log
-        # reassembles base + deltas as a flat multi-path parquet scan.
-        # The write runs on a thread: its jobs overlap the ENTIRE
-        # next-frontier stage below (prune + pagination + frontier write),
-        # which depends on wave_ex, scheduled and the PREVIOUS log read but
-        # NOT on this write; everything that consumes the updated log (the
-        # next wave's dedup gate) sits after the join() at wave end.
-        # right-size the delta's file count from the observed wave size
-        # (4M rows ≈ a few hundred MB of url+hash per file): the delta
-        # inherits `scheduled`'s 32-partition shuffle layout, which at
-        # small waves writes 32 near-empty files per wave and makes the
-        # log's read fan-out O(32·waves)
-        _seen_parts = max(1, min(n_shards, n_fresh // 4_000_000 + 1))
-        seen_out = seen_delta.coalesce(_seen_parts)
-        _seen_err: list = []
-
-        def _write_seen():
-            try:
-                catalog.write(
-                    seen_out, "seen",
-                    meta={"wave": wave_no, "kind": "delta"},
+            if (
+                seen_count == 0 and wave_no == 0 and seen_prior is None
+                and not caller_seen
+            ):
+                # truly-fresh first wave: the seen set is empty, the
+                # anti-join is the identity — skip its broadcast build +
+                # probe stages
+                fresh = allowed
+            else:
+                fresh = dedup_against_seen(
+                    allowed, seen, blobs, n_shards,
+                    broadcast_hint=bounded_wave, blob_strategy=blob_strategy,
                 )
-                if blobs is not None:
-                    # OR the wave's delta into the standing blobs (pinned
-                    # size) and checkpoint; read-back keeps the blob
-                    # lineage flat across waves
-                    delta_blobs = build_filter_blobs(
-                        seen_delta.select("url_hash"),
-                        n_shards,
-                        n_expected_per_shard=n_per_shard,
-                    )
-                    catalog.write(
-                        merge_filter_blobs(blobs, delta_blobs), "blobs",
-                        meta={"wave": wave_no},
-                    )
-            except BaseException as ex:
-                _seen_err.append(ex)
+            scheduled = schedule_fetches(fresh, robots_b, n_salts).observe(
+                obs_sched,
+                F.count(F.lit(1)).alias("n"),
+                F.approx_count_distinct("host").alias("n_hosts"),
+            )
 
-        seen_thread = threading.Thread(target=_write_seen, daemon=True)
-        seen_thread.start()
-        _mark("seen_checkpoint")
+            # scheduled feeds several downstream actions this wave (host
+            # metrics, seen delta, fetch join); persist so the robots/
+            # bloom/politeness chain runs once, not once per action
+            scheduled = scheduled.persist()
 
-        # ---- next frontier -------------------------------------------------
-        child = (
-            with_frontier_keys(links_df.select(*_child_cols), n_salts)
-            .withColumn("site", _site_expr)
-            .select(*_frontier_shape)
-        )
+            # "fetch" = join the wave against the pages table WITHOUT ever
+            # shuffling the big side: a broadcast left-semi first reduces
+            # pages to the wave's url_hashes in one streaming pass (a
+            # LeftOuter with pages on the build side would fall back to
+            # shuffling the whole pages table once the fixture-sized
+            # broadcast no longer fits); the outer join then runs between
+            # two wave-sized inputs, which AQE broadcasts.  The broadcast
+            # is one 8-byte hash per wave row, bounded by wave_budget.
+            wave_keys = scheduled.select("url_hash")
+            if bounded_wave:
+                wave_keys = F.broadcast(wave_keys)
+            pages_wave = pages_k.join(wave_keys, "url_hash", "left_semi")
+            # NO repartition_for_fetch here: the join output is already
+            # uniformly hash-partitioned on url_hash, and a (host,
+            # host_salt) repartition after the join would shuffle the
+            # wave's FULL HTML a second time (measured: the single largest
+            # cost of a 10^6-page wave).  Host grouping only matters for
+            # LIVE fetching — the live path (plans/live_fetch.py)
+            # salt-repartitions its slim wave BEFORE fetching, when rows
+            # are still url-metadata only; here the politeness schedule
+            # (fetch_seq/scheduled_ms) is already computed on the slim
+            # side, and extraction is row-wise.
+            #
+            # SHUFFLE_HASH pin (measured pathology, round 2): AQE estimated
+            # the semi-joined pages side small from the semi's selectivity
+            # guess and converted this join to broadcast — materializing
+            # the wave's FULL HTML (1 GB+ at 10^6 pages, unbounded at
+            # 10^10) as a broadcast relation AFTER already shuffling it for
+            # the initial sort-merge plan.  The hint gives the one plan
+            # that is safe at every wave size: each side shuffles once on
+            # url_hash, per-partition hash build, no sort of the html side,
+            # no html broadcast ever.
+            #
+            # The hint sits on the SLIM side (round-4 fix): hinting
+            # pages_wave made the SHJ BuildRight — every task built its
+            # hash relation out of the wave's HTML (~250k rows × ~3 KB ≈
+            # 750 MB per partition at a 12M-page wave; allocation failures
+            # killed the crawl).  Spark ≥3.3 builds the preserved side of a
+            # left-outer SHJ (SPARK-36612 landed in 3.3.0; this repo floors
+            # on PySpark 4.x anyway), so hinting `scheduled` gives
+            # BuildLeft: the hash relation holds only slim url rows and the
+            # HTML side streams through the probe — bounded build memory at
+            # ANY wave size.
+            fetched = scheduled.hint("SHUFFLE_HASH").join(
+                pages_wave, "url_hash", "left"
+            ).filter(
+                F.col("p_url").isNull() | (F.col("p_url") == F.col("url"))
+            )
 
-        # pagination expansion stays on executors (no probe collect): a wave
-        # discovering a million listing extents expands distributed.
-        # max_pagination is the anti-absurd-extent clamp — size it from the
-        # expected catalog extent (a 3M-item site declares 187,500 listing
-        # pages; the 100k default silently truncated it to 1.7M of 3.19M
-        # pages, round-4 measurement)
-        pagination = expand_pagination_df(
-            wave_ex.select(*_probe_cols), n_salts, max_pages=max_pagination
-        )
+            extracted = fetched.select(
+                *_extract_in_cols, F.lit(wave_no).alias("wave")
+            ).mapInPandas(extract_map_in_pandas, schema=CRAWL_EXTRACT_SCHEMA)
 
-        # ---- frontier pre-prune (wave-bounded; never shuffles seen) -----
-        # Round 1 anti-joined the whole nxt against the whole seen set —
-        # at 10^10 URLs that sort-merge shuffles the entire seen set every
-        # wave (ADVICE r1).  Split by provenance instead:
-        #  (a) leftover already satisfies the pruned-frontier invariant
-        #      w.r.t. seen-as-of-last-wave, so only THIS wave's delta can
-        #      newly match it — anti-join against the wave-bounded delta;
-        #  (b) new discoveries (links + pagination) are wave-bounded, so
-        #      the seen set is semi-REDUCED to their key hits first (one
-        #      streaming pass over seen, broadcast of wave-sized keys —
-        #      the same pattern as dedup_against_seen) and the anti-join
-        #      runs against the small hit set.
-        # Results are identical to the full anti-join; the wave-side
-        # bloom+anti-join remains the correctness gate either way.
-        discoveries = child.unionByName(pagination)
-        _mark("next_frontier_plan")
-        # The prune does NOT wait for the seen/blob checkpoint thread: its
-        # seen side is exactly prev-log ∪ this-wave-delta, and both are
-        # already in hand as DataFrames (`seen` still binds the previous
-        # read_log; delta keys recompute from the persisted `scheduled`).
-        # Re-reading the log here forced a join() that charged the whole
-        # checkpoint wall (~1.2-1.5 s/wave at BOTH scaling levels, r5b
-        # stage decomposition) to this stage; the thread now runs
-        # underneath the entire frontier build + write below, and the log
-        # re-read (flat base+deltas scan, bounded lineage) plus the blob
-        # read-back happen after that write.
-        if overlap_frontier:
-            # Pipelined tail: wave k's frontier writer is about to be
-            # STARTED on a thread and joined only here, one wave later —
-            # it runs under the whole of wave k+1's fetch stage.  For that
-            # to stay safe and bounded, the frontier plan must be anchored
-            # on THIS wave's durable artifacts, never on a previous wave's
-            # in-memory plan:
+            # ---- checkpoint this wave's outputs (append-log snapshot) ----
+            # the hit count rides the write action as an Observation — the
+            # separate wave_ex.filter(...).count() job it replaces was one
+            # of the larger per-wave fixed costs (VERDICT r1 next-steps #9)
+            obs_hit = Observation()
+            extracted = extracted.observe(
+                obs_hit,
+                F.sum(
+                    F.when(F.col("text").isNotNull(), 1).otherwise(0)
+                ).alias("n"),
+                # raw discovery masses for the frontier-size upper bound —
+                # they ride the same write action for free
+                F.sum(_links_size).alias("n_links"),
+                F.sum(
+                    F.when(_extent_pred, 1).otherwise(0)
+                ).alias("n_extents"),
+            )
+            snap = catalog.write(
+                extracted, "extracted",
+                meta={"wave": wave_no, "kind": "delta"},
+            )
+            wave_ex = spark.read.parquet(snap.path)
+            _mark("fetch_extract_write")
+
+            # ---- wave metrics ---------------------------------------------
+            # counts observed during the write action above (obs.get blocks
+            # until that action finished, which it already has)
+            n_wave = _obs_n(obs_wave, wave)
+            n_allowed = _obs_n(obs_allowed, allowed)
+            n_blocked = n_wave - n_allowed
+            n_fresh = _obs_n(obs_sched, scheduled)
+            seen_count += n_fresh
+            # obs_hit rides the SAME write plan AQE can rewrite around the
+            # CollectMetrics nodes on a degenerate empty wave — fall back
+            # like the other three (the recount reads the tiny written
+            # snapshot)
+            n_hit = _obs_n(obs_hit, wave_ex.filter(F.col("text").isNotNull()))
+            # lineage keeps the top-K busiest hosts, not every host: at
+            # crawl scale a wave can touch millions of hosts and an
+            # unbounded collect would be a driver OOM; the full per-host
+            # distribution stays queryable from the scheduled/extracted
+            # tables.  The collect runs on the pool so its job overlaps the
+            # seen-checkpoint write below — the two read independent inputs
+            # (persisted scheduled vs the same), and overlapping
+            # independent jobs hides per-job scheduling latency on a
+            # cluster the same way it does here.
+            host_future = pool.submit(_top_hosts, scheduled)
+            _mark("wave_counts")
+            links_df = wave_ex.select(*_links_cols).filter(
+                F.col("l").isNotNull()
+            )
+
+            # ---- audit rank / seen update ---------------------------------
+            if audit:
+                ranked = with_audit_rank(scheduled)
+                seen_delta = ranked.select(
+                    "url_hash", "url", F.lit(wave_no).alias("wave"),
+                    F.col("rank").cast("int").alias("rank"),
+                )
+            else:
+                seen_delta = scheduled.select(
+                    "url_hash", "url", F.lit(wave_no).alias("wave"),
+                    F.lit(-1).alias("rank"),
+                )
+            # append-log: only this wave's delta is written (O(delta),
+            # never a rewrite of the growing set — the 10^10-URL
+            # requirement); read_log reassembles base + deltas as a flat
+            # multi-path parquet scan.  The write runs on the pool: its
+            # jobs overlap the ENTIRE next-frontier stage below (prune +
+            # pagination + frontier write), which depends on wave_ex,
+            # scheduled and the PREVIOUS log read but NOT on this write;
+            # everything that consumes the updated log (the next wave's
+            # dedup gate) sits after the join at wave end.
+            # right-size the delta's file count from the observed wave size
+            # (4M rows ≈ a few hundred MB of url+hash per file): the delta
+            # inherits `scheduled`'s 32-partition shuffle layout, which at
+            # small waves writes 32 near-empty files per wave and makes the
+            # log's read fan-out O(32·waves)
+            _seen_parts = max(1, min(n_shards, n_fresh // 4_000_000 + 1))
+            seen_future = pool.submit(
+                _write_seen, seen_delta.coalesce(_seen_parts), seen_delta,
+                blobs, wave_no,
+            )
+            _mark("seen_checkpoint")
+
+            # ---- next frontier ---------------------------------------------
+            child = (
+                with_frontier_keys(links_df.select(*_child_cols), n_salts)
+                .withColumn("site", _site_expr)
+                .select(*_frontier_shape)
+            )
+
+            # pagination expansion stays on executors (no probe collect): a
+            # wave discovering a million listing extents expands
+            # distributed.  max_pagination is the anti-absurd-extent clamp
+            # — size it from the expected catalog extent (a 3M-item site
+            # declares 187,500 listing pages; the 100k default silently
+            # truncated it to 1.7M of 3.19M pages, round-4 measurement)
+            pagination = expand_pagination_df(
+                wave_ex.select(*_probe_cols), n_salts, max_pages=max_pagination
+            )
+
+            # ---- frontier pre-prune (wave-bounded; never shuffles seen) ---
+            # Round 1 anti-joined the whole nxt against the whole seen set
+            # — at 10^10 URLs that sort-merge shuffles the entire seen set
+            # every wave (ADVICE r1).  Split by provenance instead:
+            #  (a) leftover already satisfies the pruned-frontier invariant
+            #      w.r.t. seen-as-of-last-wave, so only THIS wave's delta
+            #      can newly match it — anti-join against the wave-bounded
+            #      delta;
+            #  (b) new discoveries (links + pagination) are wave-bounded,
+            #      so the seen set is semi-REDUCED to their key hits first
+            #      (one streaming pass over seen, broadcast of wave-sized
+            #      keys — the same pattern as dedup_against_seen) and the
+            #      anti-join runs against the small hit set.
+            # Results are identical to the full anti-join; the wave-side
+            # bloom+anti-join remains the correctness gate either way.
+            discoveries = child.unionByName(pagination)
+            _mark("next_frontier_plan")
+            # The prune does NOT wait for the seen/blob checkpoint: its
+            # seen side is exactly prev-log ∪ this-wave-delta, and both are
+            # already in hand as DataFrames (`seen` still binds the
+            # previous read_log; delta keys recompute from the written
+            # wave parquet).  The checkpoint runs underneath the entire
+            # frontier build + write below, and the log re-read (flat
+            # base+deltas scan, bounded lineage) plus the blob read-back
+            # happen after that write.
+            #
+            # Wave k's frontier writer is about to be submitted and joined
+            # only here, one wave later — it runs under the whole of wave
+            # k+1's fetch stage.  For that to stay safe and bounded, the
+            # frontier plan must be anchored on THIS wave's durable
+            # artifacts, never on a previous wave's in-memory plan:
             #  - the last writer is joined now (it had the entire fetch
             #    stage to finish, so this is a no-op in steady state);
             #  - delta keys recompute from the written wave parquet
@@ -719,11 +687,21 @@ def run_crawl(
             #  - the budgeted leftover rebinds onto the read-back of the
             #    files the last writer just published (value-identical:
             #    same rows, same dedup, same anti-join keys).
-            _join_prev_frontier()
-            delta_keys = wave_ex.select(
-                F.xxhash64("url").alias("url_hash")
-            )
-            if not leftover_vs_full:
+            if f_future is not None:
+                _, t_ms["frontier_write_bg"] = f_future.result()
+                f_future = None
+            delta_keys = wave_ex.select(F.xxhash64("url").alias("url_hash"))
+            if leftover_vs_full:
+                # one-off: imported-history frontier may overlap prior
+                # seen.  `seen` (prev log) includes the imported base; this
+                # wave's delta ⊆ the wave, which dedup_within/take_wave
+                # made url_hash-disjoint from leftover, so prev-log pruning
+                # is value-identical to new-log pruning.
+                leftover_p = leftover.join(
+                    seen.select("url_hash"), "url_hash", "left_anti"
+                )
+                leftover_vs_full = False
+            else:
                 if wave_budget is None:
                     leftover = spark.createDataFrame([], frontier.schema)
                 elif catalog.exists("frontier"):
@@ -740,114 +718,74 @@ def run_crawl(
                         .select("url_hash")
                     )
                     leftover = _d.join(_taken, "url_hash", "left_anti")
-        else:
-            delta_keys = seen_delta.select("url_hash")
-        if leftover_vs_full:
-            # one-off: imported-history frontier may overlap prior seen.
-            # `seen` (prev log) includes the imported base; this wave's
-            # delta ⊆ the wave, which dedup_within/take_wave made
-            # url_hash-disjoint from leftover, so prev-log pruning is
-            # value-identical to new-log pruning.
-            leftover_p = leftover.join(
-                seen.select("url_hash"), "url_hash", "left_anti"
+                leftover_p = leftover.join(
+                    F.broadcast(delta_keys) if bounded_wave else delta_keys,
+                    "url_hash", "left_anti",
+                )
+            seen_keys = seen.select("url_hash").unionByName(delta_keys)
+            disc_keys = discoveries.select("url_hash")
+            hits = seen_keys.join(
+                F.broadcast(disc_keys) if bounded_wave else disc_keys,
+                "url_hash", "left_semi",
             )
-            leftover_vs_full = False
-        else:
-            leftover_p = leftover.join(
-                F.broadcast(delta_keys) if bounded_wave else delta_keys,
+            disc_p = discoveries.join(
+                F.broadcast(hits) if bounded_wave else hits,
                 "url_hash", "left_anti",
             )
-        seen_keys = seen.select("url_hash").unionByName(delta_keys)
-        disc_keys = discoveries.select("url_hash")
-        hits = seen_keys.join(
-            F.broadcast(disc_keys) if bounded_wave else disc_keys,
-            "url_hash", "left_semi",
-        )
-        disc_p = discoveries.join(
-            F.broadcast(hits) if bounded_wave else hits,
-            "url_hash", "left_anti",
-        )
-        nxt = leftover_p.unionByName(disc_p)
+            nxt = leftover_p.unionByName(disc_p)
 
-        _mark("next_frontier_prune_plan")
-        host_thread.join()
-        if _host_err:
-            raise _host_err[0]
-        lineage.append(
-            {
-                "wave": wave_no,
-                "frontier_size": n_wave,
-                "robots_blocked": n_blocked,
-                "dedup_dropped": n_wave - n_blocked - n_fresh,
-                "attempted": n_fresh,
-                "fetched": n_hit,
-                "missed": n_fresh - n_hit,
-                "n_hosts": _obs_n(
-                    obs_sched, scheduled.select("host").dropDuplicates(),
-                    "n_hosts",
-                ),
-                "hosts": host_metrics,
-                "t_ms": t_ms,
-            }
-        )
-        # lineage is an append-log too: ONE row per wave (O(delta), not a
-        # growing rewrite), published on a thread that overlaps the
-        # frontier write — the two jobs share no inputs
-        l = lineage[-1]
-        lineage_df = spark.createDataFrame(
-            [
-                (
-                    l["wave"], l["frontier_size"], l["robots_blocked"],
-                    l["dedup_dropped"], l["attempted"], l["fetched"],
-                    l["missed"],
-                )
-            ],
-            "wave int, frontier_size long, robots_blocked long, "
-            "dedup_dropped long, attempted long, fetched long, missed long",
-        )
-        _lin_err: list = []
+            _mark("next_frontier_prune_plan")
+            lineage.append(
+                {
+                    "wave": wave_no,
+                    "frontier_size": n_wave,
+                    "robots_blocked": n_blocked,
+                    "dedup_dropped": n_wave - n_blocked - n_fresh,
+                    "attempted": n_fresh,
+                    "fetched": n_hit,
+                    "missed": n_fresh - n_hit,
+                    "n_hosts": _obs_n(
+                        obs_sched, scheduled.select("host").dropDuplicates(),
+                        "n_hosts",
+                    ),
+                    "hosts": host_future.result(),
+                    "t_ms": t_ms,
+                }
+            )
+            # lineage is an append-log too: ONE row per wave (O(delta), not
+            # a growing rewrite), published on the pool so it overlaps the
+            # frontier write — the two jobs share no inputs
+            l = lineage[-1]
+            lineage_df = spark.createDataFrame(
+                [
+                    (
+                        l["wave"], l["frontier_size"], l["robots_blocked"],
+                        l["dedup_dropped"], l["attempted"], l["fetched"],
+                        l["missed"],
+                    )
+                ],
+                "wave int, frontier_size long, robots_blocked long, "
+                "dedup_dropped long, attempted long, fetched long, "
+                "missed long",
+            )
+            lin_future = pool.submit(
+                catalog.write, lineage_df, "lineage",
+                meta={"wave": wave_no, "kind": "delta"},
+            )
 
-        def _write_lineage():
-            try:
-                catalog.write(
-                    lineage_df, "lineage",
-                    meta={"wave": wave_no, "kind": "delta"},
-                )
-            except BaseException as ex:
-                _lin_err.append(ex)
-
-        lin_thread = threading.Thread(target=_write_lineage, daemon=True)
-        lin_thread.start()
-        if overlap_frontier:
-            # ---- pipelined frontier write --------------------------------
+            # ---- pipelined frontier write ---------------------------------
             # The write (and with it the whole frontier COMPUTE: link
             # explode, pagination expansion, prune joins, parquet encode)
-            # runs on a thread that the loop only joins one wave later —
-            # i.e. underneath the next wave's fetch/extract/write, the
-            # dominant stage.  The next wave plans against the persisted
-            # `nxt` directly; its first action races the writer for the
-            # cached partitions, and whichever computes a block first
-            # feeds the other.  Torn interleavings of the concurrent
-            # catalog publishes are exactly what resume's orphan pruning
+            # runs on the pool and is only joined one wave later — i.e.
+            # underneath the next wave's fetch/extract/write, the dominant
+            # stage.  The next wave plans against the persisted `nxt`
+            # directly; its first action races the writer for the cached
+            # partitions, and whichever computes a block first feeds the
+            # other.  Torn interleavings of the concurrent catalog
+            # publishes are exactly what resume's orphan pruning
             # (_resume_point) makes safe.
             nxt = nxt.persist()
-            _f_err: list = []
-            _f_ms: list = []
-            _f_snap_holder: list = []
-            _w_no = wave_no
-
-            def _write_frontier():
-                try:
-                    _t = time.monotonic()
-                    _f_snap_holder.append(
-                        catalog.write(nxt, "frontier", meta={"wave": _w_no + 1})
-                    )
-                    _f_ms.append(round((time.monotonic() - _t) * 1000))
-                except BaseException as ex:
-                    _f_err.append(ex)
-
-            f_thread = threading.Thread(target=_write_frontier, daemon=True)
-            f_thread.start()
+            f_future = pool.submit(_write_frontier, nxt, wave_no + 1)
 
             # frontier-size UPPER bound for the next wave's broadcast-
             # safety decision (the manifest count is still in flight):
@@ -885,7 +823,9 @@ def run_crawl(
             if wave_budget is None:
                 leftover_term = 0
             else:
-                base = frontier_ub if frontier_ub is not None else frontier_rows
+                base = (
+                    frontier_ub if frontier_ub is not None else frontier_rows
+                )
                 leftover_term = (
                     None if base is None else max(0, base - n_wave)
                 )
@@ -896,12 +836,10 @@ def run_crawl(
             )
             frontier = nxt
             frontier_rows = None
-            lin_thread.join()
-            if _lin_err:
-                raise _lin_err[0]
-            seen_thread.join()
-            if _seen_err:
-                raise _seen_err[0]
+            # the seen log (and standing blobs) must be current before the
+            # NEXT wave's dedup gate / first-crossing blob build read them
+            lin_future.result()
+            seen_future.result()
             seen = catalog.read_log(spark, "seen")
             if blobs is not None:
                 blobs = catalog.read(spark, "blobs")
@@ -910,52 +848,22 @@ def run_crawl(
                 # exhausted frontier): its published deltas are empty; the
                 # writer's manifest proves the next frontier empty too, so
                 # the top of the loop stops without another wave
-                _f_prev = {
-                    "thread": f_thread, "err": _f_err, "ms": _f_ms,
-                    "pins": [],
-                }
-                _join_prev_frontier()
-                frontier_rows = (
-                    _f_snap_holder[0].rows if _f_snap_holder else 0
-                )
-            else:
-                _f_prev = {
-                    "thread": f_thread, "err": _f_err, "ms": _f_ms,
-                    "pins": [],
-                }
+                f_snap, t_ms["frontier_write_bg"] = f_future.result()
+                f_future = None
+                frontier_rows = f_snap.rows
             _mark("next_frontier")
             if _prev_nxt is not None:
                 _prev_nxt.unpersist()
             _prev_nxt = nxt
             scheduled.unpersist()
             wave.unpersist()
-        else:
-            f_snap = catalog.write(nxt, "frontier", meta={"wave": wave_no + 1})
-            frontier_rows = f_snap.rows
-            frontier = catalog.read(spark, "frontier")
-            lin_thread.join()
-            if _lin_err:
-                raise _lin_err[0]
-            # the seen log (and standing blobs) must be current before the
-            # NEXT wave's dedup gate / first-crossing blob build read them —
-            # awaited here, after the frontier write the thread overlapped
-            seen_thread.join()
-            if _seen_err:
-                raise _seen_err[0]
-            seen = catalog.read_log(spark, "seen")
-            if blobs is not None:
-                blobs = catalog.read(spark, "blobs")
-            _mark("next_frontier")
+            wave_no += 1
 
-            scheduled.unpersist()
-            wave.unpersist()
-        wave_no += 1
-
-    # land the last wave's in-flight frontier writer (pipelined tail) —
-    # the catalog must be complete, and its errors must surface, before
-    # the result is handed back
-    t_ms = {}
-    _join_prev_frontier()
+        # land the last wave's in-flight frontier writer — the catalog must
+        # be complete, and its errors must surface, before the result is
+        # handed back
+        if f_future is not None:
+            f_future.result()
     if _prev_nxt is not None:
         _prev_nxt.unpersist()
 

@@ -327,39 +327,8 @@ class TestSitemapParse:
 
 
 class TestPipelinedFrontier:
-    """run_crawl(overlap_frontier=True) — the default — writes wave k's
-    frontier on a thread UNDER wave k+1's fetch stage.  The pipelined and
-    serial tails must be row-identical in every mode; these pin the
-    escape hatch (overlap_frontier=False) against the default."""
-
-    def test_serial_equals_pipelined(
-        self, spark, fixture, tmp_path_factory, crawl_result
-    ):
-        # crawl_result ran with the default (pipelined) tail
-        res = _crawl(
-            spark, fixture, tmp_path_factory.mktemp("crawls"), "cs",
-            overlap_frontier=False,
-        )
-        a = sorted(
-            (r["wave"], r["rank"], r["url"])
-            for r in crawl_result.seen.collect()
-        )
-        b = sorted(
-            (r["wave"], r["rank"], r["url"]) for r in res.seen.collect()
-        )
-        assert a == b
-        ea = sorted(
-            (r["url"], r["wave"], r["text"])
-            for r in crawl_result.extracted.select(
-                "url", "wave", "text"
-            ).collect()
-        )
-        eb = sorted(
-            (r["url"], r["wave"], r["text"])
-            for r in res.extracted.select("url", "wave", "text").collect()
-        )
-        assert ea == eb
-        assert crawl_result.waves == res.waves
+    """run_crawl writes wave k's frontier on a background thread UNDER
+    wave k+1's fetch stage; its plan must not chain across waves."""
 
     def test_plan_size_bounded_across_waves(
         self, spark, fixture, tmp_path_factory
@@ -395,3 +364,39 @@ class TestPipelinedFrontier:
             sizes[len(sizes) // 2:]
         )
         assert late <= 2 * early, (early, late)
+
+
+class _WriteFailed(RuntimeError):
+    pass
+
+
+class _FailingCatalog(Catalog):
+    """Catalog whose writes of one table raise."""
+
+    def __init__(self, root: str, table: str):
+        super().__init__(root)
+        self.table = table
+
+    def write(self, df, name, *args, **kwargs):
+        if name == self.table:
+            raise _WriteFailed(name)
+        return super().write(df, name, *args, **kwargs)
+
+
+class TestBackgroundWriteErrors:
+    """The seen checkpoint is joined at the end of its wave, the frontier
+    writer one wave later; either one's error must surface from run_crawl
+    instead of dying on a worker thread."""
+
+    @pytest.mark.parametrize("table", ["seen", "frontier"])
+    def test_failing_write_raises(self, spark, fixture, tmp_path, table):
+        cat = _FailingCatalog(str(tmp_path / table), table)
+        with pytest.raises(_WriteFailed, match=table):
+            run_crawl(
+                spark,
+                fixture.pages_df(spark),
+                fixture.seeds_df(spark),
+                fixture.robots_df(spark),
+                cat,
+                max_waves=3,
+            )

@@ -1,5 +1,5 @@
 """Seen-filter properties (SURVEY.md §5.2-4): bloom no-false-negatives,
-cuckoo insert/contains/delete, end-to-end dedup correctness vs exact."""
+end-to-end dedup correctness vs exact."""
 
 import numpy as np
 import pytest
@@ -7,7 +7,6 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from no_fasel_scrapers_spark.operators.seen_filter import (
-    CuckooFilter,
     bloom_params,
     build_bloom,
     build_filter_blobs,
@@ -44,36 +43,6 @@ class TestBloomLocal:
         fresh = np.setdiff1d(probe, ins)
         mask = probe_bloom(blob, fresh.astype(np.uint64), m, k)
         assert mask.mean() < 0.03  # ~1% design fpp, generous bound
-
-
-class TestCuckoo:
-    @settings(max_examples=30, deadline=None)
-    @given(HASHES)
-    def test_insert_contains(self, keys):
-        cf = CuckooFilter(max(len(keys) * 2, 16))
-        ok = [cf.insert(k & ((1 << 64) - 1)) for k in keys]
-        assert all(ok)
-        for k in keys:
-            assert cf.contains(k & ((1 << 64) - 1))
-
-    def test_delete_keeps_live_keys(self):
-        keys = list(range(1000, 2000))
-        cf = CuckooFilter(4096)
-        for k in keys:
-            assert cf.insert(k)
-        dead, live = keys[::2], keys[1::2]
-        for k in dead:
-            assert cf.delete(k)
-        for k in live:
-            assert cf.contains(k)
-
-    def test_roundtrip_bytes(self):
-        cf = CuckooFilter(64)
-        for k in range(50):
-            cf.insert(k * 7919)
-        cf2 = CuckooFilter.from_bytes(cf.to_bytes(), cf.n_buckets)
-        for k in range(50):
-            assert cf2.contains(k * 7919)
 
 
 class TestDistributedDedup:
